@@ -1469,9 +1469,9 @@ def main() -> None:
                 )
             ).alias("_e")
         ).select("_e.src", "_e.dst")
-        _sp_pagerank(
-            _sp_edges, n_iter=10, damping=0.85, checkpoint_interval=2
-        ).write.format("noop").mode("overwrite").save()
+        _sp_pagerank(_sp_edges, n_iter=10, damping=0.85).write.format(
+            "noop"
+        ).mode("overwrite").save()
         scale_proof["pagerank_10x_sec"] = round(time.time() - t0, 3)
         _sp_pairs.unpersist()
 

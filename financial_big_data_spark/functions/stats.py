@@ -21,7 +21,7 @@ Z-score parity: sklearn ``StandardScaler`` divides by the *population* std
 
 from __future__ import annotations
 
-from pyspark.sql import Column, WindowSpec
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -90,12 +90,6 @@ def kurtosis_pandas(c: Column | str) -> Column:
     n = F.count(c).cast("double")
     g2 = F.kurtosis(c)
     return F.when(n >= 4, ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3)))
-
-
-def zscore(c: Column | str, w: WindowSpec) -> Column:
-    """sklearn-``StandardScaler`` z-score over a window scope (ddof=0)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.try_divide(c - F.avg(c).over(w), F.stddev_pop(c).over(w))
 
 
 def with_global_stats(df, aggs: list[Column]):

@@ -94,11 +94,6 @@ def rolling_std(c: ColumnOrName, w: WindowSpec, n: int, min_periods: int | None 
     return _warmup_guard(F.stddev_samp(c).over(_rows(w, n)), c, w, n, min_periods)
 
 
-def rolling_sum(c: ColumnOrName, w: WindowSpec, n: int, min_periods: int | None = None) -> Column:
-    c = _col(c)
-    return _warmup_guard(F.sum(c).over(_rows(w, n)), c, w, n, min_periods)
-
-
 def trend_strength(returns: Column, w: WindowSpec, n: int) -> Column:
     """``abs(rolling_mean(sign(returns), n))`` — directional consistency in [0,1].
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.stats import kurtosis_pandas, skew_pandas, with_global_stats
+from ..functions.stats import kurtosis_pandas, skew_pandas
 from ..functions.windows import bar_window, pct_change
 
 
@@ -51,22 +51,3 @@ def series_profile(
         F.try_divide(F.max(close) - F.min(close), F.avg(close)).alias("price_range"),
     )
 
-
-def zscore_profile(profile: DataFrame, series: str, feature_cols: list[str]) -> DataFrame:
-    """Cross-sectional z-score of each feature (sklearn StandardScaler parity:
-    population std, ddof=0 — reference clustering.py:21-22).
-
-    All k means/stds come from ONE 1-row aggregate broadcast back onto the
-    frame — not k global windows, which would funnel the whole profile frame
-    through a single partition (fatal at 1e8 series).
-    """
-    aggs = []
-    for c in feature_cols:
-        aggs.append(F.avg(c).alias(f"_mu_{c}"))
-        aggs.append(F.stddev_pop(c).alias(f"_sd_{c}"))
-    out = with_global_stats(profile, aggs)
-    for c in feature_cols:
-        out = out.withColumn(
-            f"{c}_z", F.try_divide(F.col(c) - F.col(f"_mu_{c}"), F.col(f"_sd_{c}"))
-        )
-    return out.drop(*[f"_mu_{c}" for c in feature_cols], *[f"_sd_{c}" for c in feature_cols])

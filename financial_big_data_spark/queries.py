@@ -5613,6 +5613,45 @@ FROM ranked
 """
 
 
+def _user_cooc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The user co-occurrence graph the graph queries share: users who
+    share ≥3 distinct (event_type, hour) slots, as (src, dst) with
+    src < dst. Tracked-persisted: the symmetrizing explode and the
+    downstream degree / normalization branches reference it 2-3×, and
+    each reference would otherwise replay the quadratic slot self-join
+    (optimization r12 — measured ~2× on the pagerank family; released
+    by release_tracked)."""
+    from .ml.graph import cooccurrence_pairs
+
+    return _tp(cooccurrence_pairs(
+        _events(spark, sf_dir).select(
+            "user_id", "event_type",
+            F.date_trunc("hour", F.col("ts")).alias("hr"),
+        ),
+        node="user_id",
+        keys=["event_type", "hr"],
+        min_shared=3,
+    ))
+
+
+def _symmetrized(pairs: DataFrame) -> DataFrame:
+    """Both directions of each (src, dst) pair, with ONE scan of the
+    persisted pairs (explode of both directions) instead of a two-branch
+    union: the union's branches scan the cache as concurrent tasks of the
+    same stage and, before the cache materializes, each re-runs the
+    quadratic slot self-join per partition (optimization r13 — observed
+    as duplicate concurrent jobs + "Block already exists" warnings). Same
+    rows, same schema, map-only."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src"), F.col("dst")),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
+        ).alias("_e")
+    ).select("_e.src", "_e.dst")
+
+
 def q_ev_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts (ml/graph.py triangle_count) over the
     user co-occurrence graph (≥3 shared (event_type, hour) slots — the
@@ -5622,24 +5661,10 @@ def q_ev_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counts exactly once. The oracle brute-forces the canonical
     a<b<c three-way join — the orientation trick itself is what the
     hash check certifies."""
-    from .ml.graph import cooccurrence_pairs, triangle_count
+    from .ml.graph import triangle_count
 
-    ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
     return (
-        triangle_count(pairs, per_node=True)
+        triangle_count(_user_cooc_pairs(spark, sf_dir), per_node=True)
         .select(F.col("node").alias("user_id"), "n_triangles")
     )
 
@@ -5803,39 +5828,10 @@ def q_ev_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior web-corpus curation ranks hosts by. The slot self-join is an
     equi-join on bounded keys; each iteration is one edges↔ranks join +
     one partial aggregate; rank state is one row per node."""
-    from .ml.graph import cooccurrence_pairs, pagerank
+    from .ml.graph import pagerank
 
-    ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
-    # symmetrize with ONE scan of the persisted pairs (explode of both
-    # directions) instead of a two-branch union: the union's branches scan
-    # the cache as concurrent tasks of the same stage and, before the cache
-    # materializes, each re-runs the quadratic slot self-join per partition
-    # (optimization r13 — observed as duplicate concurrent jobs + "Block
-    # already exists" warnings). Same rows, same schema, map-only.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    # checkpoint_interval=2: two rounds fuse into one job (same
-    # arithmetic, same oracle hash; measured -27% at sf0.1)
-    pr = pagerank(edges, n_iter=10, damping=0.85, checkpoint_interval=2)
+    edges = _symmetrized(_user_cooc_pairs(spark, sf_dir))
+    pr = pagerank(edges, n_iter=10, damping=0.85)
     return pr.select(
         F.col("node").alias("user_id"), _r6s(F.col("rank")).alias("rank")
     )
@@ -5848,42 +5844,13 @@ def q_ev_pagerank_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-iteration oracle mode must still pay for. NOT registered — the
     DuckDB oracle unrolls exactly 10 CTE rounds, and an early exit is
     allowed to differ in the last rounded decimal."""
-    from .ml.graph import cooccurrence_pairs, pagerank
+    from .ml.graph import pagerank
 
-    ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
-    # symmetrize with ONE scan of the persisted pairs (explode of both
-    # directions) instead of a two-branch union: the union's branches scan
-    # the cache as concurrent tasks of the same stage and, before the cache
-    # materializes, each re-runs the quadratic slot self-join per partition
-    # (optimization r13 — observed as duplicate concurrent jobs + "Block
-    # already exists" warnings). Same rows, same schema, map-only.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    # checkpoint_interval=2 + tol: the convergence test runs at each
-    # 2-round checkpoint, halving the tol path's job count; the exit
+    edges = _symmetrized(_user_cooc_pairs(spark, sf_dir))
+    # the convergence test runs at each 2-round checkpoint, so the exit
     # may land one converged round later (bench-only row — the tol
     # contract already allows last-decimal drift vs the fixed oracle)
-    pr = pagerank(edges, n_iter=10, damping=0.85, tol=1e-6,
-                  checkpoint_interval=2)
+    pr = pagerank(edges, n_iter=10, damping=0.85, tol=1e-6)
     return pr.select(
         F.col("node").alias("user_id"), _r6s(F.col("rank")).alias("rank")
     )
@@ -5894,44 +5861,15 @@ def q_ev_ppr_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``q_ev_pagerank_tol``): personalized teleport to the sub-50 user
     seed set, convergence exit at tol=1e-6 capped at 10 rounds. NOT
     registered — the PPR oracle unrolls exactly 10 CTE iterations."""
-    from .ml.graph import cooccurrence_pairs, pagerank
+    from .ml.graph import pagerank
 
-    ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
-    # symmetrize with ONE scan of the persisted pairs (explode of both
-    # directions) instead of a two-branch union: the union's branches scan
-    # the cache as concurrent tasks of the same stage and, before the cache
-    # materializes, each re-runs the quadratic slot self-join per partition
-    # (optimization r13 — observed as duplicate concurrent jobs + "Block
-    # already exists" warnings). Same rows, same schema, map-only.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = _symmetrized(_user_cooc_pairs(spark, sf_dir))
     seeds = (
         edges.select(F.col("src").alias("node"))
         .where(F.col("node") < 50)
         .distinct()
     )
-    # interval-fused tol (see q_ev_pagerank_tol)
-    pr = pagerank(edges, n_iter=10, damping=0.85, reset=seeds, tol=1e-6,
-                  checkpoint_interval=2)
+    pr = pagerank(edges, n_iter=10, damping=0.85, reset=seeds, tol=1e-6)
     return pr.select(
         F.col("node").alias("user_id"), _r6s(F.col("rank")).alias("rank")
     )
@@ -6020,40 +5958,11 @@ def q_ev_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk-based analogue of seed-driven data selection (pick crawl hosts
     near trusted domains). Oracle: the same unrolled power method with
     the per-node reset vector."""
-    from .ml.graph import cooccurrence_pairs, pagerank
+    from .ml.graph import pagerank
 
-    ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
-    # symmetrize with ONE scan of the persisted pairs (explode of both
-    # directions) instead of a two-branch union: the union's branches scan
-    # the cache as concurrent tasks of the same stage and, before the cache
-    # materializes, each re-runs the quadratic slot self-join per partition
-    # (optimization r13 — observed as duplicate concurrent jobs + "Block
-    # already exists" warnings). Same rows, same schema, map-only.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    edges = _symmetrized(_user_cooc_pairs(spark, sf_dir))
     seeds = edges.select(F.col("src").alias("node")).where(F.col("node") < 50).distinct()
-    pr = pagerank(
-        edges, n_iter=10, damping=0.85, reset=seeds, checkpoint_interval=2
-    )
+    pr = pagerank(edges, n_iter=10, damping=0.85, reset=seeds)
     return pr.select(
         F.col("node").alias("user_id"), _r6s(F.col("rank")).alias("rank")
     )
@@ -6068,22 +5977,8 @@ def q_ev_type_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     can derive: w_in, degree sums, and per-community contributions
     Q_c = w_in/m − (s_c/2m)² are all re-derived in SQL. Every aggregate
     is keyed; m rides along as a broadcast 1-row frame."""
-    from .ml.graph import cooccurrence_pairs
-
     ev = _events(spark, sf_dir)
-    # tracked-persist: the symmetrizing union (and downstream degree /
-    # normalization branches) reference `pairs` 2-3×, and each reference
-    # would replay the quadratic slot self-join (optimization r12 —
-    # measured ~2× on the pagerank family; released by release_tracked)
-    pairs = _tp(cooccurrence_pairs(
-        ev.select(
-            "user_id", "event_type",
-            F.date_trunc("hour", F.col("ts")).alias("hr"),
-        ),
-        node="user_id",
-        keys=["event_type", "hr"],
-        min_shared=3,
-    ))
+    pairs = _user_cooc_pairs(spark, sf_dir)
     w_fav = Window.partitionBy("user_id").orderBy(
         F.desc("n"), F.col("event_type")
     )

@@ -1,5 +1,5 @@
 """PageRank: dense-matrix reference parity (directed + dangling +
-weighted), mass conservation, and validation.
+source-only + weighted), mass conservation, and validation.
 
 The reference is an independent formulation — the full Google matrix
 G = d*(P + dangling-row correction) + (1-d)/N applied as a dense numpy
@@ -133,6 +133,28 @@ def test_personalized_pagerank_matches_dense_reference(spark):
         assert got[n] == pytest.approx(want[n], abs=1e-9)
 
 
+@pytest.mark.parametrize("reset_nodes", [None, [1, 5]], ids=["plain", "ppr"])
+def test_pagerank_source_only_node_matches_dense_reference(spark, reset_nodes):
+    # 5 has out-edges but no in-edge (it gets the zero-weight self-edge),
+    # 4 is a dangling sink. The dense reference runs the SAME number of
+    # rounds from the same start, so every round's arithmetic is checked;
+    # the odd n_iter makes the last round a forced checkpoint after a
+    # 2-round stride.
+    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 4), (5, 0), (5, 2)]
+    n_iter = 7
+    if reset_nodes is None:
+        pr = pagerank(_edges_df(spark, edges), n_iter=n_iter)
+        want = _dense_pr(edges, iters=n_iter)
+    else:
+        reset = spark.createDataFrame([(r,) for r in reset_nodes], "node long")
+        pr = pagerank(_edges_df(spark, edges), n_iter=n_iter, reset=reset)
+        want = _dense_ppr(edges, reset_nodes, iters=n_iter)
+    got = {r.node: r.rank for r in pr.collect()}
+    assert set(got) == set(want)
+    for n in want:
+        assert got[n] == pytest.approx(want[n], abs=1e-12)
+
+
 def test_personalized_pagerank_concentrates_near_seeds(spark):
     # symmetric ring: uniform PR gives every node 1/6; personalization
     # must pull mass toward the seed
@@ -183,41 +205,6 @@ def test_personalized_pagerank_tol_early_exit(spark):
     }
     for n in fixed:
         assert early[n] == pytest.approx(fixed[n], abs=1e-9)
-
-
-def test_pagerank_tol_with_interval_matches_converged_fixed(spark):
-    """tol + checkpoint_interval>1 (optimization r12: the convergence
-    test fused to the checkpoint stride) still converges to the same
-    ranks as fixed iteration — the stride can only overshoot by up to
-    k-1 CONVERGED rounds, never exit early on a stale delta."""
-    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 4)]
-    df = _edges_df(spark, edges)
-    fixed = {r.node: r.rank for r in pagerank(df, n_iter=200).collect()}
-    strided = {
-        r.node: r.rank
-        for r in pagerank(
-            df, n_iter=200, tol=1e-12, checkpoint_interval=2
-        ).collect()
-    }
-    assert set(strided) == set(fixed)
-    for n in fixed:
-        assert strided[n] == pytest.approx(fixed[n], abs=1e-9)
-
-
-def test_pagerank_checkpoint_interval_is_bit_identical(spark):
-    # Checkpointing cuts lineage; it must never change the arithmetic.
-    # interval=3 with n_iter=7 exercises both a mid-stride checkpoint and
-    # the forced final-iteration materialization.
-    edges = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 4), (4, 1)]
-    df = _edges_df(spark, edges)
-    base = {r.node: r.rank for r in pagerank(df, n_iter=7).collect()}
-    strided = {
-        r.node: r.rank
-        for r in pagerank(df, n_iter=7, checkpoint_interval=3).collect()
-    }
-    assert base == strided  # exact float equality, not approx
-    with pytest.raises(ValueError):
-        pagerank(df, checkpoint_interval=0)
 
 
 def test_type_modularity_query_sums_to_modularity_helper(spark, tmp_path):
