@@ -429,8 +429,8 @@ def q_ev_coarse_regime(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id",
         "event_id",
-        _r6(F.col("volatility")).alias("volatility"),
-        _r6(F.col("momentum")).alias("momentum"),
+        _r6s(F.col("volatility")).alias("volatility"),
+        _r6s(F.col("momentum")).alias("momentum"),
         F.col("market_regime"),
     )
 
@@ -454,8 +454,8 @@ WITH base AS (
   FROM feats GROUP BY user_id
 )
 SELECT f.user_id, f.event_id,
-       round(f.volatility, 6) AS volatility,
-       round(f.momentum, 6)   AS momentum,
+       round(f.volatility + 5e-13, 6) AS volatility,
+       round(f.momentum + 5e-13, 6)   AS momentum,
        CASE WHEN (f.momentum < -t.mthr) OR (f.momentum < 0 AND f.volatility >= t.vthr) THEN 1
             WHEN (f.momentum >  t.mthr) OR (f.momentum > 0 AND f.volatility >= t.vthr) THEN 0
             ELSE 2 END AS market_regime
@@ -529,8 +529,8 @@ def q_ev_coarse_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_EV_COARSE_DIST = _SQL_EV_COARSE.replace(
     """SELECT f.user_id, f.event_id,
-       round(f.volatility, 6) AS volatility,
-       round(f.momentum, 6)   AS momentum,
+       round(f.volatility + 5e-13, 6) AS volatility,
+       round(f.momentum + 5e-13, 6)   AS momentum,
        CASE WHEN (f.momentum < -t.mthr) OR (f.momentum < 0 AND f.volatility >= t.vthr) THEN 1
             WHEN (f.momentum >  t.mthr) OR (f.momentum > 0 AND f.volatility >= t.vthr) THEN 0
             ELSE 2 END AS market_regime
@@ -546,6 +546,8 @@ FROM (
   FROM feats f JOIN thr t USING (user_id)
 ) GROUP BY market_regime""",
 )
+# a drifted replace target would silently leave the row-level SELECT in place
+assert _SQL_EV_COARSE_DIST != _SQL_EV_COARSE
 
 
 def q_ev_regime5(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,7 @@ UTC-naive engines (DuckDB oracle, parquet wall-clock times) exactly.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -56,3 +57,20 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def temp_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set session ``confs`` for the ``with`` block, then put each key back
+    exactly as it was: its previous value, or unset if it had none."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, p in prev.items():
+            if p is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, p)

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import temp_conf
+
 
 def merge_upsert(
     spark: SparkSession,
@@ -54,16 +56,12 @@ def merge_upsert(
         updates.select(key).distinct(), on=key, how="left_anti"
     )
     merged = survivors.unionByName(updates.select(*target.columns))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with temp_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             merged.write.mode("overwrite")
             .partitionBy(partition_col)
             .parquet(path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def compact_small_files(

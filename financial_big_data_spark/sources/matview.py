@@ -29,8 +29,13 @@ Deliberate limits, stated rather than hidden:
   itself commits INCREMENTALLY (``_sidecar_commit``: the sidecar is
   ``_file``-clustered, so only the sidecar files holding diff-file
   partials rewrite — O(diff), flat as refreshes accumulate). Other
-  aggregates (medians) still raise; mixed per-column specs ride the
-  same sidecar (``value={"x": ["sum"], "y": ["min", "max"]}``).
+  aggregates (medians) still raise.
+- There is ONE sidecar mechanism (``_refresh_partials_view``) for every
+  view that needs one: mixed per-column specs
+  (``value={"x": ["sum"], "y": ["min", "max"]}``), MIN/MAX views — the
+  spec ``{value: ["sum", "min", "max"]}`` kept under their legacy column
+  names (``_spec_cols``) — and ``maintain="partials"`` HLL distinct
+  views. A family supplies only its partial and final aggregates.
 - The changed-key set is FILE-SCOPED even when the caller cannot name
   it: when ``changed_keys`` is omitted, it comes from the manifests'
   symmetric-difference files only (immutability means a changed key
@@ -84,13 +89,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import temp_conf
 from .versioned import (
     _commit,
     _footer_columns,
-    _in_filter,
-    _key_ranges,
+    _key_in,
     _load_manifest,
     _footer_spark_dtype,
+    _pick_files,
     _scan_files,
     _write_batch,
     table_schema,
@@ -238,44 +244,30 @@ def _apply_groups(
     A single copy-on-write write + manifest flip where the generic
     upsert-then-delete pair costs two commits and twice the job floors;
     readers also never see the half-applied intermediate version."""
-    from .bloom import _EXACT_STR_TYPES, prune_by_keys
+    from .bloom import _EXACT_STR_TYPES
 
     m = _load_manifest(view_path, None)
     nonnull = [k for k in touched_keys if k is not None]
     has_null = len(nonnull) < len(touched_keys)
-    if has_null or not nonnull:
+    if has_null:
         # footer stats exclude nulls, so a touched NULL group could hide
         # in any file — no pruning, every file rewrites (a null group
         # key is a degenerate corner; correctness over economy here)
         touched, carried = list(m["files"]), []
     else:
-        lo_k, hi_k = min(nonnull), max(nonnull)
-        ranges = _key_ranges(m["files"], group)
-        touched = [
-            f for f, (lo, hi) in ranges.items()
-            if lo is None or (lo <= hi_k and hi >= lo_k)
-        ]
-        carried = [f for f in m["files"] if f not in set(touched)]
-        if touched and dict(live_rows.dtypes).get(group) in _EXACT_STR_TYPES:
-            still = set(prune_by_keys(touched, nonnull))
-            carried += [f for f in touched if f not in still]
-            touched = [f for f in touched if f in still]
+        exact = dict(live_rows.dtypes).get(group) in _EXACT_STR_TYPES
+        touched, carried = _pick_files(
+            m["files"], group, min(nonnull), max(nonnull),
+            bloom_keys=nonnull if exact else None,
+        )
     cols_src = _footer_columns(m["files"]) or live_rows.columns
     merged = live_rows.select(*cols_src)
     if touched:
-        # keep a file row iff its group is NOT in the touched set: non-null
-        # groups survive unless listed in `nonnull` (unconditionally — even
+        # keep a file row iff its group is NOT in the touched set — even
         # when ONLY the null group was touched, every untouched non-null
-        # group must carry forward), and a null group row survives unless
-        # null itself is touched
-        in_set = _in_filter(group, nonnull) if nonnull else None
-        if nonnull and in_set is None:
-            in_set = F.col(group).isin(nonnull)  # unrenderable type: isin
-        keep = (
-            (F.col(group).isNotNull() & ~in_set)
-            if nonnull
-            else F.col(group).isNotNull()
-        )
+        # group must carry forward; a null group row survives unless null
+        # itself is touched (NULL NOT IN (...) is NULL, hence the OR)
+        keep = ~_key_in(group, touched_keys)
         if not has_null:
             keep = keep | F.col(group).isNull()
         survivors = _scan_files(spark, view_path, touched).where(keep)
@@ -358,7 +350,7 @@ def _file_col() -> F.Column:
     # with its recomputed twin and corrupt the merge. url_decode is FORM
     # decoding ('+' → space), but URI path encoding leaves a literal '+'
     # as '+' — pre-escape it to %2B so the round trip is the identity on
-    # every path byte. `_refresh_minmax` additionally asserts the decoded
+    # every path byte. `_sidecar_advance` additionally asserts the decoded
     # values land inside the manifest's file set (fail loudly, never
     # merge partials that could not be invalidated).
     uri = F.regexp_replace(F.input_file_name(), r"\+", "%2B")
@@ -382,36 +374,6 @@ def _base_files(table_path: str, view_path: str, v0: int, v1: int) -> tuple:
         ) from None
     files1 = _load_manifest(table_path, v1)["files"]
     return files0, files1
-
-
-def _partial_agg(rows: DataFrame, groups: list[str], value: str) -> DataFrame:
-    """Per-(source file, group) partial aggregates — the mergeable unit
-    the MIN/MAX refresh path maintains. Data files are immutable, so a
-    file's partial rows are immutable too: DML invalidates exactly the
-    partials of the files it rewrote."""
-    return _with_gkey(
-        rows.select(_file_col(), *[F.col(g) for g in groups], F.col(value))
-        .groupBy("_file", *groups)
-        .agg(
-            F.sum(value).alias("p_sum"),
-            F.count(F.lit(1)).alias("p_count"),
-            F.min(value).alias("p_min"),
-            F.max(value).alias("p_max"),
-        ),
-        groups,
-    )
-
-
-def _final_from_partials(partials: DataFrame, groups: list[str]) -> DataFrame:
-    return _with_gkey(
-        partials.groupBy(*groups).agg(
-            F.sum("p_sum").alias("agg_sum"),
-            F.sum("p_count").alias("agg_count"),
-            F.min("p_min").alias("agg_min"),
-            F.max("p_max").alias("agg_max"),
-        ),
-        groups,
-    )
 
 
 _SPEC_AGGS = ("sum", "min", "max")
@@ -448,42 +410,63 @@ def _norm_spec(value: dict) -> dict[str, list[str]]:
     return spec
 
 
+def _spec_cols(meta: dict) -> list[tuple] | None:
+    """The aggregates a sidecar-backed view maintains, as (value column,
+    aggregate, column suffix) triples in column order — the sidecar holds
+    ``p_<suffix>``, the view ``agg_<suffix>``; the shared count has no
+    value column. A dict spec names ``<agg>_<col>`` and puts the count
+    last. A MIN/MAX view is the spec {value: [sum, min, max]} under its
+    legacy names: sum, count, min, max. None for a ±delta view."""
+    if isinstance(meta["value"], dict):
+        cols = [
+            (c, a, f"{a}_{c}")
+            for c, ags in _norm_spec(meta["value"]).items()
+            for a in ags
+        ]
+        return cols + [(None, "count", "count")]
+    if "min" in meta["aggs"] or "max" in meta["aggs"]:
+        v = _norm_values(meta["value"])[0]
+        return [
+            (v, "sum", "sum"), (None, "count", "count"),
+            (v, "min", "min"), (v, "max", "max"),
+        ]
+    return None
+
+
+_AGG_FNS = {"sum": F.sum, "min": F.min, "max": F.max}
+
+
 def _spec_partial_agg(
-    rows: DataFrame, groups: list[str], spec: dict[str, list[str]]
+    rows: DataFrame, groups: list[str], cols: list[tuple]
 ) -> DataFrame:
-    """Per-(source file, group) partials for a MIXED spec: exactly the
-    requested (col, agg) partial columns plus the shared p_count —
-    same immutability contract as ``_partial_agg``."""
-    aggs = []
-    for c, ags in spec.items():
-        for a in ags:
-            fn = {"sum": F.sum, "min": F.min, "max": F.max}[a]
-            aggs.append(fn(F.col(c)).alias(f"p_{a}_{c}"))
+    """Per-(source file, group) partial aggregates — the mergeable unit
+    the sidecar maintains. Data files are immutable, so a file's partial
+    rows are immutable too: DML invalidates exactly the partials of the
+    files it rewrote."""
+    values = list(dict.fromkeys(c for c, _, _ in cols if c is not None))
     return _with_gkey(
         rows.select(
-            _file_col(), *[F.col(g) for g in groups],
-            *[F.col(c) for c in spec],
+            _file_col(), *[F.col(g) for g in groups], *[F.col(c) for c in values]
         )
         .groupBy("_file", *groups)
-        .agg(*aggs, F.count(F.lit(1)).alias("p_count")),
+        .agg(*[
+            (F.count(F.lit(1)) if c is None else _AGG_FNS[a](F.col(c))).alias(f"p_{s}")
+            for c, a, s in cols
+        ]),
         groups,
     )
 
 
 def _spec_final_from_partials(
-    partials: DataFrame, groups: list[str], spec: dict[str, list[str]]
+    partials: DataFrame, groups: list[str], cols: list[tuple]
 ) -> DataFrame:
-    """Merge a mixed spec's partials: sum-of-sums / min-of-mins /
-    max-of-maxes per requested pair + the shared count."""
-    outs = []
-    for c, ags in spec.items():
-        for a in ags:
-            fn = {"sum": F.sum, "min": F.min, "max": F.max}[a]
-            outs.append(fn(F.col(f"p_{a}_{c}")).alias(f"agg_{a}_{c}"))
+    """Merge partials per group: sum of sums and counts, min of mins,
+    max of maxes."""
     return _with_gkey(
-        partials.groupBy(*groups).agg(
-            *outs, F.sum("p_count").alias("agg_count")
-        ),
+        partials.groupBy(*groups).agg(*[
+            (F.sum if c is None else _AGG_FNS[a])(F.col(f"p_{s}")).alias(f"agg_{s}")
+            for c, a, s in cols
+        ]),
         groups,
     )
 
@@ -536,8 +519,11 @@ def create_matview(
     rescanned beyond the DML's own files, and the sidecar commits
     incrementally too (only sidecar files holding diff-file partials
     rewrite; the rest carry by reference — O(diff) per refresh, flat as
-    history accumulates). View columns become (group, agg_sum,
-    agg_count, agg_min, agg_max).
+    history accumulates). Such a view IS the dict spec
+    ``{value: ["sum", "min", "max"]}`` below, maintained by the same one
+    sidecar mechanism, under its legacy names: view columns (group,
+    agg_sum, agg_count, agg_min, agg_max), sidecar columns p_sum,
+    p_count, p_min, p_max.
 
     ``value`` may also be a DICT of per-column aggregate lists — a MIXED
     view like ``value={"x": ["sum"], "y": ["min", "max"]}`` maintaining
@@ -571,38 +557,6 @@ def create_matview(
             "column, or pass a dict spec (value={col: [aggs]})"
         )
     base_v = current_version(table_path)
-    base = read_version(spark, table_path, base_v)
-    if where:
-        base = base.where(F.expr(where))
-    if spec is not None:
-        # mixed per-column spec: partials sidecar wholesale (see the
-        # docstring's one-mechanism argument), _file-clustered
-        partials = _spec_partial_agg(base, groups, spec)
-        write_version(
-            partials, _partials_path(view_path), key="_file",
-            sort_extra=[gcol], bloom_extra=[gcol],
-        )
-        agg = _spec_final_from_partials(
-            read_version(spark, _partials_path(view_path)), groups, spec
-        )
-    elif minmax:
-        # the sidecar clusters by _file, NOT the group key: refreshes
-        # invalidate partials by the base files the DML rewrote, so
-        # _file footer ranges + Bloom sidecars are what keep the
-        # incremental sidecar commit O(diff) (_sidecar_commit); the
-        # group-filtered merge read prunes ROW GROUPS via the secondary
-        # (_file, group) within-file sort
-        partials = _partial_agg(base, groups, values[0])
-        write_version(
-            partials, _partials_path(view_path), key="_file",
-            sort_extra=[gcol], bloom_extra=[gcol],
-        )
-        agg = _final_from_partials(
-            read_version(spark, _partials_path(view_path)), groups
-        )
-    else:
-        agg = _aggregate(base, groups, values)
-    view_v = write_version(agg, view_path, key=gcol)
     meta = {
         "base_version": base_v,
         "group": group if isinstance(group, str) else list(group),
@@ -612,10 +566,30 @@ def create_matview(
         "aggs": ["spec"] if spec is not None else list(aggs),
         "where": where,
     }
-    if spec is not None or minmax:
+    cols = _spec_cols(meta)
+    base = read_version(spark, table_path, base_v)
+    if where:
+        base = base.where(F.expr(where))
+    if cols is not None:
+        # the sidecar clusters by _file, NOT the group key: refreshes
+        # invalidate partials by the base files the DML rewrote, so
+        # _file footer ranges + Bloom sidecars are what keep the
+        # incremental sidecar commit O(diff) (_sidecar_commit); the
+        # group-filtered merge read prunes ROW GROUPS via the secondary
+        # (_file, group) within-file sort
+        write_version(
+            _spec_partial_agg(base, groups, cols), _partials_path(view_path),
+            key="_file", sort_extra=[gcol], bloom_extra=[gcol],
+        )
+        agg = _spec_final_from_partials(
+            read_version(spark, _partials_path(view_path)), groups, cols
+        )
         # only sidecar-backed views carry the marker: ±delta views have
         # no partials layout to version
         meta["sidecar_layout"] = SIDECAR_LAYOUT
+    else:
+        agg = _aggregate(base, groups, values)
+    view_v = write_version(agg, view_path, key=gcol)
     _write_meta(view_path, meta)
     _register_view(table_path, view_path)
     return view_v
@@ -713,19 +687,10 @@ def _sidecar_touched_files(
     refined by the ``_file`` Bloom sidecars — and the rest, carried by
     reference. The sidecar is clustered by ``_file``, so a localized DML
     touches O(diff) sidecar files, not the history."""
-    from .bloom import prune_by_keys
-
     m = _load_manifest(ppath, None)
-    lo_k, hi_k = min(drop_files), max(drop_files)
-    ranges = _key_ranges(m["files"], "_file")
-    touched = [
-        f for f, (lo, hi) in ranges.items()
-        if lo is None or (lo <= hi_k and hi >= lo_k)
-    ]
-    if touched:
-        still = set(prune_by_keys(touched, drop_files))
-        touched = [f for f in touched if f in still]
-    carried = [f for f in m["files"] if f not in set(touched)]
+    touched, carried = _pick_files(
+        m["files"], "_file", min(drop_files), max(drop_files), bloom_keys=drop_files
+    )
     return m, touched, carried
 
 
@@ -735,7 +700,7 @@ def _sidecar_commit(
     drop_files: list[str],
     parts_new: DataFrame | None,
     gcol: str,
-    pruned: tuple | None = None,
+    pruned: tuple,
 ) -> None:
     """INCREMENTAL sidecar commit (VERDICT r9 #1): one atomic manifest
     flip that (a) rewrites ONLY the sidecar data files that might hold
@@ -752,16 +717,14 @@ def _sidecar_commit(
     pattern): readers never see a half-applied sidecar, and a replayed
     refresh (crash between this commit and the meta update) re-drops
     and re-adds the identical rows — idempotent by the same
-    immutability argument as before."""
-    m, touched, carried = (
-        pruned if pruned is not None else _sidecar_touched_files(ppath, drop_files)
-    )
-    drop = _in_filter("_file", drop_files)
-    if drop is None:
-        drop = F.col("_file").isin(drop_files)
+    immutability argument as before. ``pruned`` is the
+    ``_sidecar_touched_files`` split of the sidecar for ``drop_files``."""
+    m, touched, carried = pruned
     merged = parts_new
     if touched:
-        survivors = _scan_files(spark, ppath, touched).where(~drop)
+        survivors = _scan_files(spark, ppath, touched).where(
+            ~_key_in("_file", drop_files)
+        )
         merged = (
             survivors.unionByName(parts_new)
             if parts_new is not None
@@ -820,9 +783,6 @@ def _sidecar_advance(
         _write_meta(view_path, {**meta, "base_version": v1})
         return None
     drop_files = only0 + only1
-    drop = _in_filter("_file", drop_files)
-    if drop is None:
-        drop = F.col("_file").isin(drop_files)
     src_new = _scan_files(spark, table_path, only1) if only1 else None
     if src_new is not None and meta.get("where"):
         src_new = src_new.where(F.expr(meta["where"]))
@@ -851,7 +811,9 @@ def _sidecar_advance(
     touched_sc = pruned[1]
     touched = (
         (
-            _scan_files(spark, ppath, touched_sc).where(drop).select(gcol)
+            _scan_files(spark, ppath, touched_sc)
+            .where(_key_in("_file", drop_files))
+            .select(gcol)
             if touched_sc
             else None
         ),
@@ -874,36 +836,6 @@ def _sidecar_advance(
     return {"v1": v1, "probe": probe}
 
 
-def _refresh_minmax(
-    spark: SparkSession, table_path: str, view_path: str, meta: dict
-) -> dict:
-    """MIN/MAX refresh via the per-(file, group) partials sidecar — the
-    ``_sidecar_advance`` skeleton plus the sum/count/min/max merge:
-    touched groups re-merge per-group over the surviving partials, never
-    rescanning the base beyond the DML's own files."""
-    # value may be recorded as a 1-element list (create accepts value=["v"]
-    # on this path) — normalize, matching create's values[0]
-    groups, value = _norm_groups(meta["group"]), _norm_values(meta["value"])[0]
-    return _refresh_partials_view(
-        spark, table_path, view_path, meta,
-        lambda rows: _partial_agg(rows, groups, value),
-        lambda partials: _final_from_partials(partials, groups),
-    )
-
-
-def _refresh_spec(
-    spark: SparkSession, table_path: str, view_path: str, meta: dict
-) -> dict:
-    """Mixed-spec refresh: the identical sidecar skeleton with the
-    spec's partial/merge columns."""
-    groups, spec = _norm_groups(meta["group"]), _norm_spec(meta["value"])
-    return _refresh_partials_view(
-        spark, table_path, view_path, meta,
-        lambda rows: _spec_partial_agg(rows, groups, spec),
-        lambda partials: _spec_final_from_partials(partials, groups, spec),
-    )
-
-
 def _refresh_partials_view(
     spark: SparkSession,
     table_path: str,
@@ -911,78 +843,49 @@ def _refresh_partials_view(
     meta: dict,
     partial_fn,
     final_fn,
+    rows_per_group: int,
 ) -> dict:
-    """Shared partials-family view refresh (MIN/MAX + mixed specs):
-    advance the sidecar incrementally, then re-merge exactly the touched
-    groups into the view as one atomic snapshot."""
-    groups = _norm_groups(meta["group"])
-    gcol = _key_of(groups)
+    """The one partials-sidecar view refresh (MIN/MAX, mixed specs and
+    ``maintain="partials"`` distinct views): advance the sidecar
+    incrementally (``_sidecar_advance``), then re-merge exactly the
+    touched groups from the surviving partials into the view as one
+    atomic snapshot — never rescanning the base beyond the DML's own
+    files. A family supplies only its per-(file, group) ``partial_fn``,
+    its per-group ``final_fn`` and the view rows one group occupies (1
+    for aggregates, 2^b for HLL registers), which sizes the rewrite."""
+    gcol = _key_of(_norm_groups(meta["group"]))
     adv = _sidecar_advance(spark, table_path, view_path, meta, partial_fn)
     if adv is None:
         v1 = current_version(table_path)
         return {"base_version": v1, "groups_upserted": 0, "groups_deleted": 0}
     v1, probe = adv["v1"], adv["probe"]
-    p2r = read_version(spark, _partials_path(view_path))
-    old_view = read_version(spark, view_path)
-    if probe is not None:
-        nonnull = [g for g in probe if g is not None]
-        has_null = len(nonnull) < len(probe)
-        cond = None
-        if nonnull:
-            cond = _in_filter(gcol, nonnull)
-            if cond is None:
-                cond = F.col(gcol).isin(nonnull)
-        if has_null:
-            nc = F.col(gcol).isNull()
-            cond = nc if cond is None else (cond | nc)
-        if cond is None:
-            _write_meta(view_path, {**meta, "base_version": v1})
-            return {"base_version": v1, "groups_upserted": 0, "groups_deleted": 0}
-        # group-Bloom file pruning + the IN filter on top (_merge_scan)
-        pruned = _merge_scan(spark, _partials_path(view_path), gcol, probe)
-        live_rows = final_fn(pruned.where(cond)).collect()
-        live_set = {r[gcol] for r in live_rows}
-        dead_keys = [g for g in probe if g not in live_set]
-        n_up, n_dead = len(live_rows), len(dead_keys)
+    ppath = _partials_path(view_path)
+    n_up = n_dead = 0
+    if probe:
+        # the merged groups stay distributed (≤2^b register rows per
+        # group is too wide to collect at 10k groups), pinned for the
+        # live-group probe + the write; the scan is group-Bloom
+        # file-pruned (_merge_scan) with the key-set filter on top
+        merged = final_fn(
+            _merge_scan(spark, ppath, gcol, probe).where(_key_in(gcol, probe))
+        ).persist()
+        live = {r[gcol] for r in merged.select(gcol).distinct().collect()}
+        n_up, n_dead = len(live), len(set(probe) - live)
         if n_up or n_dead:
-            sch = table_schema(view_path)
-            if sch is None:
-                sch = old_view.schema
-            arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-            prev_arrow = spark.conf.get(arrow_conf, None)
-            try:
-                import pandas as pd
-
-                spark.conf.set(arrow_conf, "true")
-                live_local = spark.createDataFrame(
-                    pd.DataFrame(
-                        [tuple(r[n] for n in sch.names) for r in live_rows],
-                        columns=sch.names,
-                    ),
-                    sch,
-                )
-            except Exception:  # noqa: BLE001 - arrow/pandas edge: pickled path
-                live_local = spark.createDataFrame(
-                    [tuple(r[n] for n in sch.names) for r in live_rows], sch
-                )
-            finally:
-                if prev_arrow is None:
-                    spark.conf.unset(arrow_conf)
-                else:
-                    spark.conf.set(arrow_conf, prev_arrow)
             _apply_groups(
-                spark, view_path, live_local.coalesce(1), gcol,
-                [r[gcol] for r in live_rows] + dead_keys,
-                n_files=max(1, -(-n_up // 1_000_000)),
+                spark, view_path, merged, gcol, list(probe),
+                n_files=max(1, -(-n_up * rows_per_group // 1_000_000)),
             )
-    else:
+        merged.unpersist()
+    elif probe is None:
         # unbounded touched set: rebuild the view wholesale from the new
         # sidecar (still never rescans the base) and count the diff
-        new_view = final_fn(p2r).persist()
-        n_up = new_view.count()
+        new_view = final_fn(read_version(spark, ppath)).persist()
+        n_up = new_view.select(gcol).distinct().count()
         # NULL-SAFE anti (a plain left_anti never matches null keys, so a
         # live null group would always count dead — stats only, but wrong)
-        ov, nv = old_view.select(gcol).alias("o"), new_view.select(gcol).alias("n")
+        ov = read_version(spark, view_path).select(gcol).distinct().alias("o")
+        nv = new_view.select(gcol).distinct().alias("n")
         n_dead = (
             ov.join(
                 nv, F.col(f"o.{gcol}").eqNullSafe(F.col(f"n.{gcol}")), "left_anti"
@@ -1035,14 +938,17 @@ def refresh_matview(
             "this is a distinct-count register view — refresh with "
             "refresh_distinct_matview (append-only merge semantics)"
         )
-    if isinstance(meta["value"], dict):
-        # mixed per-column spec: partials-sidecar family, FILE-driven
-        # (the symmetric difference IS the change set)
-        return _refresh_spec(spark, table_path, view_path, meta)
-    if "min" in meta.get("aggs", ()) or "max" in meta.get("aggs", ()):
-        # partial-aggregate path: FILE-driven — changed_keys is not
-        # needed and not used
-        return _refresh_minmax(spark, table_path, view_path, meta)
+    cols = _spec_cols(meta)
+    if cols is not None:
+        # MIN/MAX and mixed specs: partials-sidecar family, FILE-driven
+        # (the symmetric difference IS the change set) — changed_keys is
+        # not needed and not used
+        return _refresh_partials_view(
+            spark, table_path, view_path, meta,
+            lambda rows: _spec_partial_agg(rows, groups, cols),
+            lambda partials: _spec_final_from_partials(partials, groups, cols),
+            rows_per_group=1,
+        )
     values = _norm_values(meta["value"])
     sum_names = _sum_cols(values)
     sv_names = [f"_sv_{i}" for i in range(len(values))]
@@ -1185,37 +1091,22 @@ def refresh_matview(
         # discipline as upsert_version.
         from .bloom import _collect_keys_capped
 
-        limit_conf = "spark.sql.limit.initialNumPartitions"
-        aqe_conf = "spark.sql.adaptive.enabled"
-        shuf_conf = "spark.sql.shuffle.partitions"
-        prev_limit = spark.conf.get(limit_conf, None)
-        prev_aqe = spark.conf.get(aqe_conf, None)
-        prev_shuf = spark.conf.get(shuf_conf, None)
-        spark.conf.set(limit_conf, "1000000")
-        # AQE splits the distinct+limit into shuffle-stage + result jobs
-        # for no optimization gain on a capped collect — one job, not two
-        spark.conf.set(aqe_conf, "false")
+        confs = {
+            "spark.sql.limit.initialNumPartitions": "1000000",
+            # AQE splits the distinct+limit into shuffle-stage + result
+            # jobs for no optimization gain on a capped collect — one
+            # job, not two
+            "spark.sql.adaptive.enabled": "false",
+        }
         if derived_small:
             # we built changed_keys ourselves from a SMALL diff (≤64
             # files): the digest groupBy is a skinny shuffle where 8
             # tasks beat 32 near-empty ones (AQE, which would coalesce
             # them, is off in this window). A large diff — compaction —
             # keeps the session default.
-            spark.conf.set(shuf_conf, "8")
-        try:
+            confs["spark.sql.shuffle.partitions"] = "8"
+        with temp_conf(spark, confs):
             probe = _collect_keys_capped(changed_keys_df, key, cap=10_000)
-        finally:
-            for conf, prev in (
-                (limit_conf, prev_limit),
-                (aqe_conf, prev_aqe),
-                (shuf_conf, prev_shuf) if derived_small else (None, None),
-            ):
-                if conf is None:
-                    continue
-                if prev is None:
-                    spark.conf.unset(conf)
-                else:
-                    spark.conf.set(conf, prev)
     persisted_chg = None
     key_filter = None
     if probe is not None:
@@ -1228,9 +1119,7 @@ def refresh_matview(
         # bounded sets keep the semi-join (a 10k-literal expression tree
         # costs the analyzer more than the broadcast costs the executors)
         if len(nonnull) <= 2048:
-            key_filter = _in_filter(key, nonnull)
-            if key_filter is None:
-                key_filter = F.col(key).isin(nonnull)
+            key_filter = _key_in(key, nonnull)
     if key_filter is None:
         chg = changed_keys_df.select(key).distinct()
         if probe is None:
@@ -1242,11 +1131,7 @@ def refresh_matview(
         persisted_chg = chg.persist()
 
     def signed_rows(files: list[str], sign: int) -> DataFrame | None:
-        ranges = _key_ranges(files, key)
-        picked = [
-            f for f, (flo, fhi) in ranges.items()
-            if flo is None or (flo <= hi and fhi >= lo)
-        ]
+        picked = _pick_files(files, key, lo, hi)[0]
         if not picked:
             return None
         rows = _scan_files(spark, table_path, picked).where(
@@ -1301,181 +1186,155 @@ def refresh_matview(
     # unbounded fallback below keeps AQE (its delta aggregate can be big
     # enough for coalescing/skew handling to matter) and the null-safe
     # join + persisted cascade.
-    aqe_conf = "spark.sql.adaptive.enabled"
-    shuf_conf = "spark.sql.shuffle.partitions"
-    limit_conf = "spark.sql.limit.initialNumPartitions"
-    prev_confs = {c: spark.conf.get(c, None) for c in (aqe_conf, shuf_conf, limit_conf)}
+    confs = {
+        # CollectLimit scales up incrementally (1, 4, 16... partitions —
+        # several job waves); launching all partitions in wave one makes
+        # each capped collect a single job
+        "spark.sql.limit.initialNumPartitions": "1000000",
+    }
     if probe is not None:
-        spark.conf.set(aqe_conf, "false")
+        confs["spark.sql.adaptive.enabled"] = "false"
         # delta-sized exchanges: 8 tasks beat 32 near-empty ones (AQE,
         # which would coalesce them, is off in this window by choice)
-        spark.conf.set(shuf_conf, "8")
-    # CollectLimit scales up incrementally (1, 4, 16... partitions —
-    # several job waves); launching all partitions in wave one makes
-    # each capped collect a single job
-    spark.conf.set(limit_conf, "1000000")
+        confs["spark.sql.shuffle.partitions"] = "8"
     touched = None
     try:
-        delta_rows = delta.limit(10_001).collect()
-        if len(delta_rows) <= 10_000:
-            gvals = [r[gcol] for r in delta_rows]
-            nonnull_g = [g for g in gvals if g is not None]
-            has_null_g = len(nonnull_g) < len(gvals)
-            old_rows = []
-            m_view = _load_manifest(view_path, None)
-            if m_view["files"] and gvals:
-                if has_null_g:
-                    # footer stats exclude nulls — a null group could
-                    # hide in any file
-                    picked = list(m_view["files"])
-                elif nonnull_g:
-                    glo, ghi = min(nonnull_g), max(nonnull_g)
-                    picked = [
-                        f
-                        for f, (flo, fhi) in _key_ranges(
-                            m_view["files"], gcol
-                        ).items()
-                        if flo is None or (flo <= ghi and fhi >= glo)
-                    ]
-                else:
-                    picked = []
-                if picked:
-                    cond = None
-                    if nonnull_g:
-                        cond = _in_filter(gcol, nonnull_g)
-                        if cond is None:
-                            cond = F.col(gcol).isin(nonnull_g)
+        with temp_conf(spark, confs):
+            delta_rows = delta.limit(10_001).collect()
+            if len(delta_rows) <= 10_000:
+                gvals = [r[gcol] for r in delta_rows]
+                nonnull_g = [g for g in gvals if g is not None]
+                has_null_g = len(nonnull_g) < len(gvals)
+                old_rows = []
+                m_view = _load_manifest(view_path, None)
+                if m_view["files"] and gvals:
                     if has_null_g:
-                        null_cond = F.col(gcol).isNull()
-                        cond = null_cond if cond is None else (cond | null_cond)
-                    old_rows = (
-                        _scan_files(spark, view_path, picked).where(cond).collect()
-                    )
-            old = {
-                r[gcol]: ([r[s] for s in sum_names], r["agg_count"])
-                for r in old_rows
-            }
-            sch = table_schema(view_path)
-            if sch is None:
-                sch = read_version(spark, view_path).schema
-            live_rows, live_keys, dead_keys = [], [], []
-            for r in delta_rows:
-                g = r[gcol]
-                o_sums, o_count = old.get(g, ([0.0] * len(values), 0))
-                n_count = (o_count or 0) + (r["d_count"] or 0)
-                if n_count > 0:
-                    # build the full view row in recorded-schema order:
-                    # group column values (and _gkey, composite views)
-                    # come straight off the delta row
-                    vals = {"agg_count": int(n_count)}
-                    for s, d, o in zip(sum_names, d_names, o_sums):
-                        vals[s] = float(
-                            (o if o is not None else 0.0) + (r[d] or 0.0)
+                        # footer stats exclude nulls — a null group could
+                        # hide in any file
+                        picked = list(m_view["files"])
+                    else:
+                        picked = _pick_files(
+                            m_view["files"], gcol, min(nonnull_g), max(nonnull_g)
+                        )[0]
+                    if picked:
+                        old_rows = (
+                            _scan_files(spark, view_path, picked)
+                            .where(_key_in(gcol, gvals))
+                            .collect()
                         )
-                    live_rows.append(
-                        tuple(
-                            vals[n] if n in vals else r[n] for n in sch.names
+                old = {
+                    r[gcol]: ([r[s] for s in sum_names], r["agg_count"])
+                    for r in old_rows
+                }
+                sch = table_schema(view_path)
+                if sch is None:
+                    sch = read_version(spark, view_path).schema
+                live_rows, live_keys, dead_keys = [], [], []
+                for r in delta_rows:
+                    g = r[gcol]
+                    o_sums, o_count = old.get(g, ([0.0] * len(values), 0))
+                    n_count = (o_count or 0) + (r["d_count"] or 0)
+                    if n_count > 0:
+                        # build the full view row in recorded-schema order:
+                        # group column values (and _gkey, composite views)
+                        # come straight off the delta row
+                        vals = {"agg_count": int(n_count)}
+                        for s, d, o in zip(sum_names, d_names, o_sums):
+                            vals[s] = float(
+                                (o if o is not None else 0.0) + (r[d] or 0.0)
+                            )
+                        live_rows.append(
+                            tuple(
+                                vals[n] if n in vals else r[n] for n in sch.names
+                            )
                         )
-                    )
-                    live_keys.append(g)
-                else:
-                    dead_keys.append(g)
-            n_up, n_dead = len(live_rows), len(dead_keys)
-            if n_up or n_dead:
-                # ARROW local relation: a plain createDataFrame pickles
-                # the rows into a parallelized RDD whose execution spawns
-                # a python worker — measured 1.47s for a 2k-row frame vs
-                # 0.19s through Arrow. coalesce(1): the local relation
-                # otherwise contributes near-empty tasks to the write
-                # stage — pure task-floor waste for ≤10k rows.
-                live_local = None
-                arrow_conf = "spark.sql.execution.arrow.pyspark.enabled"
-                prev_arrow = spark.conf.get(arrow_conf, None)
-                try:
+                        live_keys.append(g)
+                    else:
+                        dead_keys.append(g)
+                n_up, n_dead = len(live_rows), len(dead_keys)
+                if n_up or n_dead:
+                    # ARROW local relation: a plain createDataFrame pickles
+                    # the rows into a parallelized RDD whose execution spawns
+                    # a python worker — measured 1.47s for a 2k-row frame vs
+                    # 0.19s through Arrow. coalesce(1): the local relation
+                    # otherwise contributes near-empty tasks to the write
+                    # stage — pure task-floor waste for ≤10k rows.
                     import pandas as pd
 
-                    spark.conf.set(arrow_conf, "true")
-                    live_local = spark.createDataFrame(
-                        pd.DataFrame(live_rows, columns=sch.names), sch
+                    arrow = {"spark.sql.execution.arrow.pyspark.enabled": "true"}
+                    with temp_conf(spark, arrow):
+                        try:
+                            live_local = spark.createDataFrame(
+                                pd.DataFrame(live_rows, columns=sch.names), sch
+                            )
+                        except Exception:  # noqa: BLE001 - arrow/pandas edge: pickled path
+                            live_local = spark.createDataFrame(live_rows, sch)
+                    live_local = live_local.coalesce(1)
+                    # ONE atomic snapshot applies upserts AND drops in a
+                    # single write + commit; the skinny (group, sum, count)
+                    # view packs ~1M rows/file comfortably
+                    _apply_groups(
+                        spark, view_path, live_local, gcol,
+                        live_keys + dead_keys,
+                        n_files=max(1, -(-n_up // 1_000_000)),
                     )
-                except Exception:  # noqa: BLE001 - arrow/pandas edge: pickled path
-                    live_local = spark.createDataFrame(live_rows, sch)
-                finally:
-                    if prev_arrow is None:
-                        spark.conf.unset(arrow_conf)
-                    else:
-                        spark.conf.set(arrow_conf, prev_arrow)
-                live_local = live_local.coalesce(1)
-                # ONE atomic snapshot applies upserts AND drops in a
-                # single write + commit; the skinny (group, sum, count)
-                # view packs ~1M rows/file comfortably
-                _apply_groups(
-                    spark, view_path, live_local, gcol,
-                    live_keys + dead_keys,
-                    n_files=max(1, -(-n_up // 1_000_000)),
-                )
-        else:
-            # unbounded: delta ⟕ view (NULL-SAFE key — a null group is a
-            # real group whose old totals must carry and whose liveness
-            # must classify correctly; EqualNullSafe stays an equi-join
-            # key for Catalyst), persisted ONCE for the count + DML pair.
-            view = read_version(spark, view_path)
-            # cast back to the view's EXISTING physical types: the
-            # coalesce(0.0) arithmetic widens an integer-valued agg_sum
-            # to double, and an upsert that rewrites only touched files
-            # would then mix physical types within one manifest (and
-            # record the widened type in _schema.json, breaking the
-            # explicit-schema scan of carried files). Exact: a long view
-            # means long inputs, whose sums are integral.
-            cnt_t = view.schema["agg_count"].dataType
-            d, w = delta.alias("d"), view.alias("w")
-            touched = (
-                d.join(
-                    w,
-                    F.col(f"d.{gcol}").eqNullSafe(F.col(f"w.{gcol}")),
-                    how="left",
-                )
-                .select(
-                    *[F.col(f"d.{g}").alias(g) for g in groups],
-                    *(
-                        [F.col("d._gkey").alias("_gkey")]
-                        if gcol == "_gkey"
-                        else []
-                    ),
-                    *[
-                        (
-                            F.coalesce(f"w.{s}", F.lit(0.0))
-                            + F.coalesce(f"d.{dn}", F.lit(0.0))
-                        ).cast(view.schema[s].dataType).alias(s)
-                        for s, dn in zip(sum_names, d_names)
-                    ],
-                    (
-                        F.coalesce("w.agg_count", F.lit(0))
-                        + F.coalesce("d.d_count", F.lit(0))
-                    ).cast(cnt_t).alias("agg_count"),
-                )
-                .persist()
-            )
-            dead = touched.where(F.col("agg_count") <= 0).select(gcol)
-            live = touched.where(F.col("agg_count") > 0)
-            counts = touched.agg(
-                F.count(F.when(F.col("agg_count") > 0, 1)).alias("up"),
-                F.count(F.when(F.col("agg_count") <= 0, 1)).alias("dead"),
-            ).first()
-            n_up, n_dead = int(counts["up"]), int(counts["dead"])
-            if n_up:
-                upsert_version(
-                    spark, view_path, live, key=gcol, dedupe_updates=False,
-                    n_files=max(1, -(-n_up // 1_000_000)),
-                )
-            if n_dead:
-                delete_version(spark, view_path, dead, key=gcol)
-    finally:
-        for conf, prev in prev_confs.items():
-            if prev is None:
-                spark.conf.unset(conf)
             else:
-                spark.conf.set(conf, prev)
+                # unbounded: delta ⟕ view (NULL-SAFE key — a null group is a
+                # real group whose old totals must carry and whose liveness
+                # must classify correctly; EqualNullSafe stays an equi-join
+                # key for Catalyst), persisted ONCE for the count + DML pair.
+                view = read_version(spark, view_path)
+                # cast back to the view's EXISTING physical types: the
+                # coalesce(0.0) arithmetic widens an integer-valued agg_sum
+                # to double, and an upsert that rewrites only touched files
+                # would then mix physical types within one manifest (and
+                # record the widened type in _schema.json, breaking the
+                # explicit-schema scan of carried files). Exact: a long view
+                # means long inputs, whose sums are integral.
+                cnt_t = view.schema["agg_count"].dataType
+                d, w = delta.alias("d"), view.alias("w")
+                touched = (
+                    d.join(
+                        w,
+                        F.col(f"d.{gcol}").eqNullSafe(F.col(f"w.{gcol}")),
+                        how="left",
+                    )
+                    .select(
+                        *[F.col(f"d.{g}").alias(g) for g in groups],
+                        *(
+                            [F.col("d._gkey").alias("_gkey")]
+                            if gcol == "_gkey"
+                            else []
+                        ),
+                        *[
+                            (
+                                F.coalesce(f"w.{s}", F.lit(0.0))
+                                + F.coalesce(f"d.{dn}", F.lit(0.0))
+                            ).cast(view.schema[s].dataType).alias(s)
+                            for s, dn in zip(sum_names, d_names)
+                        ],
+                        (
+                            F.coalesce("w.agg_count", F.lit(0))
+                            + F.coalesce("d.d_count", F.lit(0))
+                        ).cast(cnt_t).alias("agg_count"),
+                    )
+                    .persist()
+                )
+                dead = touched.where(F.col("agg_count") <= 0).select(gcol)
+                live = touched.where(F.col("agg_count") > 0)
+                counts = touched.agg(
+                    F.count(F.when(F.col("agg_count") > 0, 1)).alias("up"),
+                    F.count(F.when(F.col("agg_count") <= 0, 1)).alias("dead"),
+                ).first()
+                n_up, n_dead = int(counts["up"]), int(counts["dead"])
+                if n_up:
+                    upsert_version(
+                        spark, view_path, live, key=gcol, dedupe_updates=False,
+                        n_files=max(1, -(-n_up // 1_000_000)),
+                    )
+                if n_dead:
+                    delete_version(spark, view_path, dead, key=gcol)
+    finally:
         if touched is not None:
             touched.unpersist()
         if persisted_chg is not None:
@@ -1493,7 +1352,7 @@ def _hll_partial_agg(
 ) -> DataFrame:
     """Per-(source file, group) HLL register partials — the mergeable
     unit the delete-capable distinct-matview path maintains. Same
-    immutability contract as ``_partial_agg``: a file's register rows
+    immutability contract as ``_spec_partial_agg``: a file's register rows
     never change, so DML invalidates exactly the rewritten files'
     partials."""
     from ..operators.sketches import hll_sketch
@@ -1537,10 +1396,11 @@ def create_distinct_matview(
     monotonicity is then also the stated limit — a file REWRITE
     (update/delete) can lower a true register and silently over-count,
     so ``refresh_distinct_matview`` detects removed files and refuses
-    (or rebuilds, opt-in) instead of merging wrong state.
+    instead of merging wrong state (rebuild by calling this again).
 
     ``maintain="partials"`` additionally keeps a per-(file, group)
-    register sidecar (the ``_partial_agg`` pattern): DML — INCLUDING
+    register sidecar — the one sidecar mechanism the MIN/MAX and
+    mixed-spec views ride (``_refresh_partials_view``): DML — INCLUDING
     deletes and updates — invalidates exactly the rewritten files'
     partials, and a refresh re-merges touched groups from the surviving
     sidecar rows, never rescanning the base beyond the DML's own files.
@@ -1601,107 +1461,28 @@ def read_distinct_matview(spark: SparkSession, view_path: str) -> DataFrame:
     return hll_estimate(regs, b=meta["b"], by=_norm_groups(meta["group"]))
 
 
-def _refresh_distinct_partials(
-    spark: SparkSession, table_path: str, view_path: str, meta: dict
-) -> dict:
-    """Delete-capable distinct refresh via the per-(file, group) register
-    sidecar: ``_sidecar_advance`` drops the rewritten files' partials and
-    recomputes only1's, then touched groups re-merge (max per (group,
-    bucket)) from the surviving partials — register-identical to a
-    from-scratch sketch of the current snapshot, without rescanning the
-    base beyond the DML's own files."""
-    groups, value, b = _norm_groups(meta["group"]), meta["value"], meta["b"]
-    gcol = _key_of(groups)
-    adv = _sidecar_advance(
-        spark, table_path, view_path, meta,
-        lambda rows: _hll_partial_agg(rows, groups, value, b),
-    )
-    if adv is None:
-        v1 = current_version(table_path)
-        return {
-            "base_version": v1, "groups_upserted": 0,
-            "groups_deleted": 0, "rebuilt": False,
-        }
-    v1, probe = adv["v1"], adv["probe"]
-    p2r = read_version(spark, _partials_path(view_path))
-    old_view = read_version(spark, view_path)
-    if probe is not None:
-        nonnull = [g for g in probe if g is not None]
-        has_null = len(nonnull) < len(probe)
-        cond = None
-        if nonnull:
-            cond = _in_filter(gcol, nonnull)
-            if cond is None:
-                cond = F.col(gcol).isin(nonnull)
-        if has_null:
-            nc = F.col(gcol).isNull()
-            cond = nc if cond is None else (cond | nc)
-        if cond is None:
-            _write_meta(view_path, {**meta, "base_version": v1})
-            return {
-                "base_version": v1, "groups_upserted": 0,
-                "groups_deleted": 0, "rebuilt": False,
-            }
-        # registers stay distributed (≤2^b rows per group is too wide to
-        # collect at 10k groups); pinned for the live-group probe + write;
-        # the scan is group-Bloom file-pruned (_merge_scan)
-        pruned = _merge_scan(spark, _partials_path(view_path), gcol, probe)
-        merged = _regs_from_partials(pruned.where(cond), groups).persist()
-        live = {r[gcol] for r in merged.select(gcol).distinct().collect()}
-        n_up, n_dead = len(live), len(set(probe) - live)
-        if n_up or n_dead:
-            _apply_groups(
-                spark, view_path, merged, gcol, list(probe),
-                n_files=max(1, -(-n_up * (2 ** b) // 1_000_000)),
-            )
-        merged.unpersist()
-    else:
-        # unbounded touched set: rebuild the view wholesale from the new
-        # sidecar (still never rescans the base) and count the diff
-        new_view = _regs_from_partials(p2r, groups).persist()
-        n_up = new_view.select(gcol).distinct().count()
-        # NULL-SAFE anti — same stats-only null-group argument as minmax
-        ov = old_view.select(gcol).distinct().alias("o")
-        nv = new_view.select(gcol).distinct().alias("n")
-        n_dead = (
-            ov.join(
-                nv, F.col(f"o.{gcol}").eqNullSafe(F.col(f"n.{gcol}")), "left_anti"
-            ).count()
-        )
-        write_version(new_view, view_path, key=gcol)
-        new_view.unpersist()
-    _write_meta(view_path, {**meta, "base_version": v1})
-    return {
-        "base_version": v1,
-        "groups_upserted": int(n_up),
-        "groups_deleted": int(n_dead),
-        "rebuilt": False,
-    }
-
-
 def refresh_distinct_matview(
     spark: SparkSession,
     table_path: str,
     view_path: str,
-    on_mutation: str = "error",
 ) -> dict:
-    """Advance the register view. ``maintain="partials"`` views route to
-    the sidecar path (``_refresh_distinct_partials``) — ANY DML,
+    """Advance the register view. ``maintain="partials"`` views ride the
+    shared sidecar refresh (``_refresh_partials_view``) — ANY DML,
     including deletes, costs O(symmetric-diff scan + diff-scoped sidecar
-    commit); ``on_mutation`` is ignored there.
+    commit).
 
     ``maintain="registers"`` views advance over APPEND-ONLY DML: scan
     only the files the manifests' symmetric difference ADDED, sketch
     them, and merge (element-wise max) into the touched groups'
     registers as one atomic snapshot. Removed files mean a rewrite
     happened somewhere — registers are monotone and cannot un-see rows —
-    so the refresh refuses (``on_mutation="error"``) or recomputes from
-    the current snapshot (``on_mutation="rebuild"``, one full pass,
-    stated). Returns {"base_version", "groups_upserted", "rebuilt"}."""
+    so the refresh refuses; rebuild with ``create_distinct_matview``
+    (one full pass), or create the view with ``maintain="partials"``.
+    Returns {"base_version", "groups_upserted", "rebuilt"} (plus
+    "groups_deleted" on the partials path); "rebuilt" is always False,
+    a refresh never recomputes from scratch."""
     from ..operators.sketches import hll_merge, hll_sketch
 
-    if on_mutation not in ("error", "rebuild"):
-        raise ValueError("on_mutation must be 'error' or 'rebuild'")
     meta = _read_meta(view_path)
     if meta.get("kind") != "hll_distinct":
         raise ValueError(f"view at {view_path} is not a distinct matview")
@@ -1716,28 +1497,23 @@ def refresh_distinct_matview(
             f"is at {v1} — the base table went backwards; rebuild"
         )
     if meta.get("maintain") == "partials":
-        return _refresh_distinct_partials(spark, table_path, view_path, meta)
+        stats = _refresh_partials_view(
+            spark, table_path, view_path, meta,
+            lambda rows: _hll_partial_agg(rows, groups, value, b),
+            lambda partials: _regs_from_partials(partials, groups),
+            rows_per_group=2 ** b,
+        )
+        return {**stats, "rebuilt": False}
     files0, files1 = _base_files(table_path, view_path, v0, v1)
     only0 = sorted(set(files0) - set(files1))
     only1 = sorted(set(files1) - set(files0))
     if only0:
-        if on_mutation == "error":
-            raise ValueError(
-                "non-append DML detected (files were rewritten): HLL "
-                "registers are monotone and cannot subtract rows — pass "
-                "on_mutation='rebuild' or use create_distinct_matview"
-            )
-        regs = _with_gkey(
-            hll_sketch(
-                read_version(spark, table_path, v1), value=value, b=b, by=groups
-            ),
-            groups,
+        raise ValueError(
+            "non-append DML detected (files were rewritten): HLL "
+            "registers are monotone and cannot subtract rows — rebuild "
+            "with create_distinct_matview (maintain='partials' views "
+            "refresh through deletes)"
         )
-        n_up = write_version(regs, view_path, key=gcol) and regs.select(
-            gcol
-        ).distinct().count()
-        _write_meta(view_path, {**meta, "base_version": v1})
-        return {"base_version": v1, "groups_upserted": int(n_up), "rebuilt": True}
     if not only1:
         _write_meta(view_path, {**meta, "base_version": v1})
         return {"base_version": v1, "groups_upserted": 0, "rebuilt": False}
@@ -1755,17 +1531,7 @@ def refresh_distinct_matview(
         # those groups' old rows and commit as ONE atomic snapshot; the
         # registers themselves stay distributed (≤2^b rows per group is
         # still too wide to collect at 10k groups)
-        nonnull = [g for g in probe if g is not None]
-        has_null = len(nonnull) < len(probe)
-        cond = None
-        if nonnull:
-            cond = _in_filter(gcol, nonnull)
-            if cond is None:
-                cond = F.col(gcol).isin(nonnull)
-        if has_null:
-            nc = F.col(gcol).isNull()
-            cond = nc if cond is None else (cond | nc)
-        old = read_version(spark, view_path).where(cond)
+        old = read_version(spark, view_path).where(_key_in(gcol, probe))
         merged = _with_gkey(hll_merge(old, regs_new, by=groups), groups)
         _apply_groups(
             spark, view_path, merged, gcol, list(probe),

@@ -231,6 +231,22 @@ def _in_filter(col: str, values: list):
     return F.expr(f"{quoted} IN ({', '.join(rendered)})")
 
 
+def _key_in(col: str, keys: list):
+    """Null-aware bounded key-set predicate: true where ``col`` is one of
+    ``keys``, a None among them matching the NULL key. The non-null keys
+    render as one ``_in_filter`` expression (``isin`` for types without a
+    safe literal rendering). None for an empty ``keys``."""
+    nonnull = [k for k in keys if k is not None]
+    cond = None
+    if nonnull:
+        cond = _in_filter(col, nonnull)
+        if cond is None:
+            cond = F.col(col).isin(nonnull)
+    if len(nonnull) < len(keys):
+        cond = F.col(col).isNull() if cond is None else cond | F.col(col).isNull()
+    return cond
+
+
 def _write_batch(
     df: DataFrame, path: str, key: str, n_files: int | None,
     sort_extra: list[str] | None = None,
@@ -365,6 +381,28 @@ def _key_ranges(files: list[str], key: str) -> dict[str, tuple]:
     return {f: r[key] for f, r in _col_ranges(files, [key]).items()}
 
 
+def _overlaps(rng: tuple, lo, hi) -> bool:
+    """Whether a file's footer ``(min, max)`` range might hold a value in
+    [lo, hi]; a stat-less file (None) might hold anything."""
+    flo, fhi = rng
+    return flo is None or (flo <= hi and fhi >= lo)
+
+
+def _pick_files(
+    files: list[str], key: str, lo, hi, bloom_keys: list | None = None
+) -> tuple[list[str], list[str]]:
+    """(touched, carried): the files whose footer ``key`` range overlaps
+    [lo, hi] — narrowed by their Bloom sidecars when ``bloom_keys`` is
+    given (zero false negatives) — and every other file."""
+    from .bloom import prune_by_keys
+
+    touched = [f for f, r in _key_ranges(files, key).items() if _overlaps(r, lo, hi)]
+    if touched and bloom_keys is not None:
+        touched = prune_by_keys(touched, bloom_keys)
+    keep = set(touched)
+    return touched, [f for f in files if f not in keep]
+
+
 def _footer_spark_dtype(file: str, col: str) -> str | None:
     """Spark dtype name of ``col`` from the parquet FOOTER schema — the
     point-lookup path must not pay a Spark datasource resolution (file
@@ -409,7 +447,6 @@ def upsert_version(
     key: str,
     n_files: int | None = None,
     dedupe_updates: bool = True,
-    probe_keys: list | None = None,
 ) -> int:
     """Copy-on-write MERGE: matched keys take the update row, new keys
     insert, and ONLY files whose footer key-range overlaps the update
@@ -423,13 +460,7 @@ def upsert_version(
     by the canonical JSON rendering of the non-key columns — stable
     across retries, unlike ``dropDuplicates``). Pass False only when
     the caller guarantees key-unique input and wants to skip the
-    aggregate.
-
-    ``probe_keys``: the batch's exact distinct key set, when the caller
-    already holds it driver-side (e.g. a matview refresh that collected
-    the touched groups) — skips the capped distinct-collect job. The
-    caller guarantees it is complete; an incomplete set would silently
-    drop rows from unrewritten files."""
+    aggregate."""
     m = _load_manifest(path, None)
     if dedupe_updates:
         others = sorted(c for c in updates.columns if c != key)
@@ -445,16 +476,9 @@ def upsert_version(
     # key range (min/max derived driver-side) and the Bloom prune; an
     # unbounded or string-cast-unsafe batch falls back to the 2-value
     # range aggregate — never a collected key list of fact-data size
-    from .bloom import _EXACT_STR_TYPES, _collect_keys_capped, prune_by_keys
+    from .bloom import _collect_keys_capped
 
-    if probe_keys is not None and dict(updates.dtypes).get(key) not in _EXACT_STR_TYPES:
-        # caller-held keys of a type whose str() can disagree with
-        # Spark's string cast would FALSE-NEGATIVE the bloom probe —
-        # ignore them and re-derive through the guarded path
-        probe_keys = None
-    probe = probe_keys if probe_keys is not None else _collect_keys_capped(
-        updates, key, cap=10_000
-    )
+    probe = _collect_keys_capped(updates, key, cap=10_000)
     if probe is not None:
         nonnull = [k for k in probe if k is not None]
         if not nonnull:
@@ -465,22 +489,12 @@ def upsert_version(
         lo_k, hi_k = mm["lo"], mm["hi"]
         if lo_k is None:
             return m["version"]
-    ranges = _key_ranges(m["files"], key)
-    touched, carried = [], []
-    for f, (lo, hi) in ranges.items():
-        if lo is None or (lo <= hi_k and hi >= lo_k):
-            touched.append(f)
-        else:
-            carried.append(f)
     # Bloom notch (sources/bloom.py): when the update batch's distinct
     # keys fit the bounded-metadata cap, drop range-touched files whose
     # sidecar proves no matched key — an insert of brand-new keys then
     # rewrites NOTHING. Zero false negatives, so correctness is the
     # range path's; this only removes work.
-    if touched and probe is not None:
-        still = set(prune_by_keys(touched, probe))
-        carried += [f for f in touched if f not in still]
-        touched = [f for f in touched if f in still]
+    touched, carried = _pick_files(m["files"], key, lo_k, hi_k, bloom_keys=probe)
     survivors = None
     if touched:
         scan = _scan_files(spark, path, touched)
@@ -632,7 +646,7 @@ def _pinned_view_versions(path: str) -> dict[str, int]:
     return pinned
 
 
-def vacuum(path: str, keep_last: int = 2, on_pinned: str = "retain") -> dict:
+def vacuum(path: str, keep_last: int = 2) -> dict:
     """Retire old snapshots: drop all but the newest ``keep_last``
     manifests, then delete every data file no surviving manifest
     references. Returns {"manifests_removed": n, "files_removed": n,
@@ -645,19 +659,14 @@ def vacuum(path: str, keep_last: int = 2, on_pinned: str = "retain") -> dict:
 
     Materialized views PIN base versions (a refresh diffs the view's
     recorded snapshot against CURRENT): views registered at
-    ``create_matview`` time (``_views.json``) are honored here —
-    ``on_pinned="retain"`` (default) keeps a pinned manifest and its
-    files even when older than ``keep_last``, so the view's next refresh
-    still finds its delta base; ``on_pinned="drop"`` vacuums it anyway
-    and prints the affected view and the remedy (the view's next refresh
-    raises the named rebuild error). Unregistered views (created before
-    this registry existed) still get the named error at refresh time."""
+    ``create_matview`` time (``_views.json``) are honored here — a pinned
+    manifest and its files stay even when older than ``keep_last``, so
+    the view's next refresh still finds its delta base. Unregistered
+    views (created before this registry existed, or whose registry entry
+    is gone) get the named rebuild error at refresh time instead."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    if on_pinned not in ("retain", "drop"):
-        raise ValueError("on_pinned must be 'retain' or 'drop'")
     import re
-    import sys
 
     versions = sorted(
         int(m.group(1))
@@ -670,17 +679,8 @@ def vacuum(path: str, keep_last: int = 2, on_pinned: str = "retain") -> dict:
     drop_set = set(drop)
     for vp, pv in sorted(pinned.items()):
         if pv in drop_set:
-            if on_pinned == "retain":
-                drop_set.discard(pv)
-                pinned_retained[vp] = pv
-            else:
-                print(
-                    f"vacuum: dropping base version {pv} of {path} still "
-                    f"pinned by matview {vp} — its next refresh will fail; "
-                    "rebuild it with create_matview (or refresh before "
-                    "vacuuming)",
-                    file=sys.stderr,
-                )
+            drop_set.discard(pv)
+            pinned_retained[vp] = pv
     drop = [v for v in drop if v in drop_set]
     keep = sorted(set(keep) | set(pinned_retained.values()))
     # prune DELETED views from the registry while we hold it — and only
@@ -738,24 +738,18 @@ def delete_version(
     keys: DataFrame,
     key: str,
     n_files: int | None = None,
-    probe_keys: list | None = None,
 ) -> int:
     """Keyed DELETE as a new snapshot: files whose footer key-range
     overlaps the delete set are rewritten without the deleted keys
     (LEFT ANTI on the uniform key); everything else carries over by
     reference. Completes the DML triple — upsert covers insert/update,
-    this covers delete — and `changefeed` reports the removals.
-    ``probe_keys``: same contract as upsert_version."""
+    this covers delete — and `changefeed` reports the removals."""
     m = _load_manifest(path, None)
     # same one-job probe-first discipline as upsert_version: the capped
     # distinct collect yields the range AND the Bloom probe set
-    from .bloom import _EXACT_STR_TYPES, _collect_keys_capped, prune_by_keys
+    from .bloom import _collect_keys_capped
 
-    if probe_keys is not None and dict(keys.dtypes).get(key) not in _EXACT_STR_TYPES:
-        probe_keys = None
-    probe = probe_keys if probe_keys is not None else _collect_keys_capped(
-        keys, key, cap=10_000
-    )
+    probe = _collect_keys_capped(keys, key, cap=10_000)
     if probe is not None:
         nonnull = [k for k in probe if k is not None]
         if not nonnull:
@@ -766,16 +760,9 @@ def delete_version(
         lo_k, hi_k = mm["lo"], mm["hi"]
         if lo_k is None:
             return m["version"]
-    ranges = _key_ranges(m["files"], key)
-    touched = [
-        f for f, (lo, hi) in ranges.items()
-        if lo is None or (lo <= hi_k and hi >= lo_k)
-    ]
     # same Bloom notch as upsert_version: a delete of absent keys
     # rewrites nothing
-    if touched and probe is not None:
-        touched = prune_by_keys(touched, probe)
-    carried = [f for f in m["files"] if f not in set(touched)]
+    touched, carried = _pick_files(m["files"], key, lo_k, hi_k, bloom_keys=probe)
     new_files: list[str] = []
     if touched:
         scan = _scan_files(spark, path, touched)
@@ -862,35 +849,6 @@ def compact_version(
     return v
 
 
-def read_version_pruned(
-    spark: SparkSession,
-    path: str,
-    key: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Key-range read that prunes at the MANIFEST level: only files whose
-    footer key-range intersects [lo, hi] are handed to the scan at all
-    (the exact predicate still applies on top). On a key-clustered
-    snapshot this is the planner-independent guarantee that a point/range
-    lookup touches O(matching files), not the table — the same
-    footer-stats contract the Z-order writer exposes."""
-    m = _load_manifest(path, version)
-    if not m["files"]:
-        return read_version(spark, path, version)
-    ranges = _key_ranges(m["files"], key)
-    picked = [
-        f for f, (flo, fhi) in ranges.items()
-        if flo is None or (flo <= hi and fhi >= lo)
-    ]
-    if not picked:
-        return (
-            _scan_files(spark, path, m["files"]).where(F.lit(False))
-        )
-    return _scan_files(spark, path, picked).where(F.col(key).between(lo, hi))
-
-
 def read_version_keys(
     spark: SparkSession,
     path: str,
@@ -926,8 +884,7 @@ def read_version_keys(
     for f in m["files"]:
         b = load_sidecar(f) if bloom_ok else None
         if b is None:
-            flo, fhi = _key_ranges([f], key)[f]
-            if flo is None or (flo <= hi and fhi >= lo):
+            if _overlaps(_key_ranges([f], key)[f], lo, hi):
                 picked.append(f)
         elif b.might_contain_any_hashed(hashes):
             picked.append(f)
@@ -935,10 +892,7 @@ def read_version_keys(
         return _scan_files(spark, path, m["files"]).where(F.lit(False))
     # one-expr IN rendering (py4j literal trap — see _in_filter); probe
     # sets are bounded driver metadata by this API's contract
-    in_set = _in_filter(key, list(keys))
-    if in_set is None:
-        in_set = F.col(key).isin(list(keys))
-    return _scan_files(spark, path, picked).where(in_set)
+    return _scan_files(spark, path, picked).where(_key_in(key, list(keys)))
 
 
 def read_version_box(
@@ -960,11 +914,7 @@ def read_version_box(
     ranges = _col_ranges(m["files"], list(box))
     picked = [
         f for f, per_col in ranges.items()
-        if all(
-            per_col[c][0] is None
-            or (per_col[c][0] <= hi and per_col[c][1] >= lo)
-            for c, (lo, hi) in box.items()
-        )
+        if all(_overlaps(per_col[c], lo, hi) for c, (lo, hi) in box.items())
     ]
     if not picked:
         return _scan_files(spark, path, m["files"]).where(F.lit(False))

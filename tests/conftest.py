@@ -165,7 +165,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_composite_key_distinct_matview_with_deletes",
         "test_composite_key_matview_through_delete_bearing_dml",
         "test_distinct_matview_partials_group_wipe",
-        "test_distinct_matview_partials_survives_deletes",
         "test_distinct_matview_partials_unbounded_touched_groups",
         "test_distinct_matview_unbounded_touched_groups",
         "test_filtered_matview_rows_cross_the_predicate",
@@ -173,7 +172,6 @@ SLOW_TESTS: dict[str, set[str]] = {
         "test_minmax_matview_group_wipe_and_noop",
         "test_minmax_matview_survives_delete_of_the_max",
         "test_minmax_matview_unbounded_touched_groups",
-        "test_mixed_spec_matview_through_delete_bearing_dml",
         "test_sidecar_commit_flat_over_successive_dml",
         "test_sidecar_compaction_then_refresh",
         "test_sidecar_layout_guard_refuses_old_layout",

@@ -202,32 +202,6 @@ def test_streaming_upsert_keeps_view_current(spark, paths):
     assert got == {(0, 102.0, 2), (1, 6.0, 2)}  # 99+3 / 2+4
 
 
-def test_refresh_touching_only_null_group_keeps_others(spark, paths):
-    """ADVICE r7 (high): when the refresh's delta touches ONLY the null
-    group, every untouched non-null group must carry through the one-shot
-    snapshot rewrite — the old keep-predicate collapsed to lit(False) and
-    silently dropped them all."""
-    base, view = paths
-    df = spark.range(30).select(
-        F.col("id"),
-        F.when(F.col("id") < 5, F.lit(None).cast("long"))
-        .otherwise(F.col("id") % 3)
-        .alias("g"),
-        (F.col("id") * 1.5).alias("v"),
-    )
-    write_version(df, base, key="id")
-    create_matview(spark, base, view, group="g", value="v")
-    # update ONLY rows whose group is null
-    updates = spark.range(5).select(
-        F.col("id"), F.lit(None).cast("long").alias("g"), F.lit(100.0).alias("v")
-    )
-    upsert_version(spark, base, updates, key="id")
-    refresh_matview(spark, base, view, key="id")
-    rows = _view_rows(spark, view)
-    assert rows == _recompute(spark, base)
-    assert {g for g, _, _ in rows} == {None, 0, 1, 2}
-
-
 def _recompute_minmax(spark, base_path):
     return {
         (r.g, round(r.s, 6), r.c, round(r.mn, 6), round(r.mx, 6))
@@ -248,6 +222,69 @@ def _view_rows_minmax(spark, view_path):
         (r.g, round(r.agg_sum, 6), r.agg_count, round(r.agg_min, 6), round(r.agg_max, 6))
         for r in read_matview(spark, view_path).collect()
     }
+
+
+@pytest.mark.parametrize("kind", ["delta", "minmax", "distinct_partials"])
+def test_refresh_touching_only_null_group_keeps_others(spark, paths, kind):
+    """ADVICE r7 (high): when the refresh touches ONLY the null group,
+    every untouched non-null group must carry through the one-shot
+    snapshot rewrite — the old keep-predicate collapsed to lit(False) and
+    silently dropped them all. Checked for each view family: the ±delta
+    sum/count view, the MIN/MAX partials view and the
+    maintain="partials" distinct view."""
+    from financial_big_data_spark.sources.matview import (
+        create_distinct_matview,
+        refresh_distinct_matview,
+    )
+    from financial_big_data_spark.sources.versioned import append_version
+
+    base, view = paths
+
+    def rows(lo, hi, g, v, u):
+        return spark.range(lo, hi).select(
+            F.col("id"), g.alias("g"), v.alias("v"), u.alias("u")
+        )
+
+    null_g = F.lit(None).cast("long")
+    write_version(
+        rows(5, 30, F.col("id") % 3, F.col("id") * 1.5,
+             (F.col("id") % 4).cast("string")),
+        base, key="id",
+    )
+    # the null-group rows sit alone in one file, so the upsert below
+    # rewrites no other group's rows and the partials families also see
+    # a touched set of exactly {NULL}
+    append_version(
+        spark, base,
+        rows(0, 5, null_g, F.col("id") * 1.5, (F.col("id") % 4).cast("string")),
+        key="id",
+    )
+    if kind == "distinct_partials":
+        create_distinct_matview(
+            spark, base, view, group="g", value="u", b=6, maintain="partials"
+        )
+    else:
+        aggs = ("sum", "count", "min", "max") if kind == "minmax" else ("sum", "count")
+        create_matview(spark, base, view, group="g", value="v", aggs=aggs)
+    # update ONLY rows whose group is null
+    upsert_version(spark, base, rows(0, 5, null_g, F.lit(100.0), F.lit("x")), key="id")
+    if kind == "distinct_partials":
+        stats = refresh_distinct_matview(spark, base, view)
+        got = {(r.g, r.bucket, r.rho) for r in read_version(spark, view).collect()}
+        assert got == _from_scratch_regs(spark, base, 6)
+        groups = {g for g, _, _ in got}
+    elif kind == "minmax":
+        stats = refresh_matview(spark, base, view, key="id")
+        got = _view_rows_minmax(spark, view)
+        assert got == _recompute_minmax(spark, base)
+        groups = {g for g, *_ in got}
+    else:
+        stats = refresh_matview(spark, base, view, key="id")
+        got = _view_rows(spark, view)
+        assert got == _recompute(spark, base)
+        groups = {g for g, _, _ in got}
+    assert stats["groups_upserted"] == 1 and stats["groups_deleted"] == 0
+    assert groups == {None, 0, 1, 2}
 
 
 def test_minmax_matview_survives_delete_of_the_max(spark, paths):
@@ -366,9 +403,8 @@ def test_distinct_matview_refuses_mutation(spark, paths):
     # the generic refresh refuses the register view outright
     with pytest.raises(ValueError, match="register view"):
         refresh_matview(spark, base, view, key="id")
-    # opt-in rebuild recomputes from the current snapshot
-    stats = refresh_distinct_matview(spark, base, view, on_mutation="rebuild")
-    assert stats["rebuilt"] is True
+    # the remedy: rebuild from the current snapshot
+    create_distinct_matview(spark, base, view, group="g", value="u", b=6)
     from financial_big_data_spark.operators.sketches import hll_estimate, hll_sketch
 
     want = {
@@ -614,8 +650,8 @@ def test_keys_unknown_refresh_scans_only_rewritten_base_files(spark, paths, monk
 
 
 def test_vacuum_past_view_base_raises_named_error(spark, paths):
-    """vacuum(on_pinned="drop") can retire the manifest a view's
-    base_version points at (printing the view + remedy); the refresh must
+    """vacuum retires the manifest an UNREGISTERED view's base_version
+    points at (no pin in the base table's _views.json); the refresh must
     then name the view and the rebuild remedy instead of dying in
     _load_manifest with a raw FileNotFoundError."""
     from financial_big_data_spark.sources.versioned import vacuum
@@ -633,8 +669,9 @@ def test_vacuum_past_view_base_raises_named_error(spark, paths):
             key="id",
             dedupe_updates=False,
         )
-    # drops v1 — the view's recorded snapshot — despite the registry pin
-    vacuum(base, keep_last=1, on_pinned="drop")
+    # unregistered view: nothing pins v1, the view's recorded snapshot
+    os.remove(os.path.join(base, "_views.json"))
+    vacuum(base, keep_last=1)
     with pytest.raises(ValueError, match="vacuumed|rebuild with create_matview"):
         refresh_matview(spark, base, view, key="id")
 

@@ -202,3 +202,36 @@ def test_coarse_regime_rejects_both_routes(spark, bars_df):
 
     with _pt.raises(ValueError):
         coarse_regime(bars_df, approx_accuracy=1000, sketch_k=128)
+
+
+def _load_repo_module(relpath: str):
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    name = os.path.splitext(os.path.basename(relpath))[0]
+    spec = importlib.util.spec_from_file_location(name, os.path.join(root, relpath))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_ev_coarse_regime_half_tie_matches_oracle(spark, tmp_path):
+    """A 6dp half-tie must round the same on Spark and on the DuckDB
+    oracle: seeded events (seed 5, 100k rows) hold one momentum whose
+    shortest repr ends in 5 (Spark rounded it to 0.504688, DuckDB to
+    0.504687 before both sides took the tie-stable round)."""
+    import duckdb
+
+    from financial_big_data_spark.queries import REGISTRY
+
+    gen = _load_repo_module("perfbench/gen.py")
+    check = _load_repo_module("tools/check_correctness.py")
+    gen.write_events_file(5, str(tmp_path), 100_000)
+    fn, sql = REGISTRY["ev_coarse_regime"]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    errs = check.compare("ev_coarse_regime", fn(spark, str(tmp_path)), con.execute(sql).df())
+    assert errs == []

@@ -240,10 +240,10 @@ def test_compact_version_preserves_rows_and_history(spark, vpath):
 
 
 def test_read_version_pruned_touches_fewer_files(spark, vpath):
-    from financial_big_data_spark.sources.versioned import read_version_pruned
+    from financial_big_data_spark.sources.versioned import read_version_box
 
     write_version(_base(spark, 400), vpath, key="id", n_files=8)
-    df = read_version_pruned(spark, vpath, key="id", lo=10, hi=20)
+    df = read_version_box(spark, vpath, {"id": (10, 20)})
     got = sorted(r.id for r in df.collect())
     assert got == list(range(10, 21))
     # manifest-level pruning: the scan's input files are a strict subset
@@ -252,7 +252,7 @@ def test_read_version_pruned_touches_fewer_files(spark, vpath):
 
     assert len(files_read) < len(_load_manifest(vpath, 1)["files"])
     # empty-range read returns no rows, schema intact
-    empty = read_version_pruned(spark, vpath, key="id", lo=10_000, hi=10_001)
+    empty = read_version_box(spark, vpath, {"id": (10_000, 10_001)})
     assert empty.count() == 0 and "name" in empty.columns
 
 
